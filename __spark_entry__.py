@@ -3454,8 +3454,8 @@ def dp127_hilbert_layout(spark: SparkSession, sf: str) -> DataFrame:
     then the xy2d quadrant/rotate recursion unrolled one level per bit.
     All integer CASE arithmetic; the oracle replays the recursion as a
     chain of per-level CTEs, bit for bit. See tools/scale_probes_r7.py
-    probe_hilbert_vs_zorder_spans for the measured file-skipping
-    comparison against the Morton key."""
+    probe_hilbert_vs_zorder_spans at commit fe50628 for the measured
+    file-skipping comparison against the Morton key."""
     orders = load_table(spark, sf, "orders")
     out = orders.transform(
         _t(
@@ -4899,8 +4899,8 @@ def q31_curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     ACON-level knob for exactly this, measured in BASELINE.md (r12 knob
     study: 5.35 s un-persisted vs 3.84 s persisted at sf0.1, and the
     gap widens with corpus width); the 100k-doc probe
-    (tools/scale_probes_r9.py) quantified the un-persisted chain at
-    24.8 s, the sum of its stages.
+    (tools/scale_probes_r9.py at commit fe50628) quantified the
+    un-persisted chain at 24.8 s, the sum of its stages.
     """
     from lakehouse_engine_spark import load_data
 

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lakehouse_engine_spark.datapipes.registry import register
+from lakehouse_engine_spark.utils.sql_parser import quote_ident
 
 TransformerFn = Callable[[DataFrame], DataFrame]
 
@@ -486,7 +487,7 @@ def embedding_random_projection(
         return 1 if int(h[0], 16) < 8 else -1
 
     def _project_unroll(df: DataFrame, d_in: int, scale: float) -> DataFrame:
-        quoted = "`" + input_col.replace("`", "``") + "`"
+        quoted = quote_ident(input_col)
         comps = []
         for i in range(out_dim):
             terms = " ".join(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lakehouse_engine_spark.datapipes.registry import register
+from lakehouse_engine_spark.utils.sql_parser import quote_ident
 
 TransformerFn = Callable[[DataFrame], DataFrame]
 
@@ -464,7 +465,7 @@ def _lapack_solve_moments(dbl: DataFrame, keys: List[str], d: int, l2: float) ->
     bcols = [f"b{i}" for i in range(k)]
     key_fields = [f for f in dbl.schema.fields if f.name in keys]
     out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in key_fields]
+        [f"{quote_ident(f.name)} {f.dataType.simpleString()}" for f in key_fields]
         + ["n BIGINT"]
         + [f"w{i} DOUBLE" for i in range(k)]
         + ["r2 DOUBLE"]

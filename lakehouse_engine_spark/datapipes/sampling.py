@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lakehouse_engine_spark.datapipes.registry import register
+from lakehouse_engine_spark.utils.sql_parser import quote_ident
 
 BUCKETS = 1_000_000
 
@@ -297,7 +298,7 @@ def mixture_plan(
         spark = df.sparkSession
         wdf = spark.createDataFrame(
             [(g, int(p)) for g, p in sorted(weights.items())],
-            f"`{group_col}` string, parts long",
+            f"{quote_ident(group_col)} string, parts long",
         )
         # the weights frame keys groups as STRING; a non-string corpus
         # group column would otherwise match through implicit casts that

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lakehouse_engine_spark.datapipes.registry import register
+from lakehouse_engine_spark.utils.sql_parser import quote_ident
 
 TransformerFn = Callable[[DataFrame], DataFrame]
 
@@ -126,7 +127,7 @@ def streaming_running_totals(
         from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
         key_fields = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
+            f"{quote_ident(f.name)} {f.dataType.simpleString()}"
             for f in df.select(*on).schema.fields
         )
         out_schema = (
@@ -268,12 +269,12 @@ def streaming_ewma_anomaly(
         # every subsequent ewma/z/flag for the key
         df = df.filter(F.col(ts_col).isNotNull())
         key_fields = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
+            f"{quote_ident(f.name)} {f.dataType.simpleString()}"
             for f in df.select(*on).schema.fields
         )
         ts_type = df.schema[ts_col].dataType.simpleString()
         out_schema = (
-            f"{key_fields}, `{ts_col}` {ts_type}, `{value_col}` DOUBLE, "
+            f"{key_fields}, {quote_ident(ts_col)} {ts_type}, {quote_ident(value_col)} DOUBLE, "
             "ewma DOUBLE, z DOUBLE, is_anomaly BOOLEAN"
         )
 
@@ -464,7 +465,7 @@ def streaming_approx_distinct(
 
     def _fn(df: DataFrame) -> DataFrame:
         key_fields = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
+            f"{quote_ident(f.name)} {f.dataType.simpleString()}"
             for f in df.select(*on).schema.fields
         )
         out_schema = (
@@ -736,7 +737,7 @@ def streaming_reservoir_quantiles(
         )
 
         key_fields = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
+            f"{quote_ident(f.name)} {f.dataType.simpleString()}"
             for f in df.select(*on).schema.fields
         )
         qfields = ", ".join(f"{qname(p)} DOUBLE" for p in probs_list)
@@ -861,7 +862,7 @@ def streaming_dedup_exact(
         from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
         out_schema = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in src.schema.fields
+            f"{quote_ident(f.name)} {f.dataType.simpleString()}" for f in src.schema.fields
         )
         timeout = (
             GroupStateTimeout.ProcessingTimeTimeout
@@ -1029,7 +1030,7 @@ def streaming_event_pattern(
         )
         key_fields = [f for f in src.schema.fields if f.name in on]
         out_schema = ", ".join(
-            [f"`{f.name}` {f.dataType.simpleString()}" for f in key_fields]
+            [f"{quote_ident(f.name)} {f.dataType.simpleString()}" for f in key_fields]
             + ["n_new INT", "n_matches BIGINT", "seq_len BIGINT", "first_match STRING"]
         )
 
@@ -1278,9 +1279,9 @@ def streaming_bottomk_sample(
                 f"string type, got {id_type}"
             )
         out_schema = ", ".join(
-            [f"`{f.name}` {f.dataType.simpleString()}" for f in key_fields]
+            [f"{quote_ident(f.name)} {f.dataType.simpleString()}" for f in key_fields]
             + [
-                f"`{id_field.name}` {id_field.dataType.simpleString()}",
+                f"{quote_ident(id_field.name)} {id_field.dataType.simpleString()}",
                 "sample_rank INT",
                 "total_seen BIGINT",
             ]
@@ -1433,9 +1434,9 @@ def streaming_topk_score(
                 f"string type, got {id_type}"
             )
         out_schema = ", ".join(
-            [f"`{f.name}` {f.dataType.simpleString()}" for f in key_fields]
+            [f"{quote_ident(f.name)} {f.dataType.simpleString()}" for f in key_fields]
             + [
-                f"`{id_field.name}` {id_field.dataType.simpleString()}",
+                f"{quote_ident(id_field.name)} {id_field.dataType.simpleString()}",
                 "score DOUBLE",
                 "rank INT",
                 "total_seen BIGINT",
@@ -1684,7 +1685,7 @@ def _hist_stream_plan(src, on, key_fields, extra_out, update):
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in key_fields]
+        [f"{quote_ident(f.name)} {f.dataType.simpleString()}" for f in key_fields]
         + extra_out
     )
     return src.groupBy(*on).applyInPandasWithState(
@@ -1988,7 +1989,7 @@ def streaming_heavy_hitters(
         )
         key_fields = [f for f in src.schema.fields if f.name in on]
         out_schema = ", ".join(
-            [f"`{f.name}` {f.dataType.simpleString()}" for f in key_fields]
+            [f"{quote_ident(f.name)} {f.dataType.simpleString()}" for f in key_fields]
             + ["item STRING", "count_min BIGINT", "count_max BIGINT",
                "processed BIGINT"]
         )
@@ -2091,7 +2092,7 @@ def streaming_funnel(
         ts_type = [f for f in src.schema.fields if f.name == "__ts"][0].dataType.simpleString()
         k = len(stages)
         out_schema = ", ".join(
-            [f"`{f.name}` {f.dataType.simpleString()}" for f in key_fields]
+            [f"{quote_ident(f.name)} {f.dataType.simpleString()}" for f in key_fields]
             + [f"stage{i + 1}_ts {ts_type}" for i in range(k)]
         )
         state_schema = ", ".join(f"s{i + 1} BIGINT" for i in range(k))
@@ -2200,8 +2201,8 @@ def streaming_session_stats(
             ts_col=evt,
             gap=gap,
             aggs={
-                "__ss": f"min(`{ts_col}`)",
-                "__sl": f"max(`{ts_col}`)",
+                "__ss": f"min({quote_ident(ts_col)})",
+                "__sl": f"max({quote_ident(ts_col)})",
             },
         )(src)
         return out.select(

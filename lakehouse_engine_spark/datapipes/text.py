@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lakehouse_engine_spark.datapipes.registry import register, register_contextual
+from lakehouse_engine_spark.utils.sql_parser import quote_ident
 
 TransformerFn = Callable[[DataFrame], DataFrame]
 
@@ -2533,7 +2534,7 @@ def dsir_score(
     # operator trees (same when/otherwise shape, same left-assoc
     # arithmetic) as one parser call each.
     def _toks_sql(src: str) -> str:
-        return f"filter(split(trim(lower(`{src}`)), '\\\\s+'), t -> t != '')"
+        return f"filter(split(trim(lower({quote_ident(src)})), '\\\\s+'), t -> t != '')"
 
     def _shingles_sql(src: str, n: int) -> str:
         toks = _toks_sql(src)

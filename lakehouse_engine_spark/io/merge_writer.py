@@ -5,8 +5,11 @@ MergeOptions semantics: delete/update/insert predicates + column sets,
 insert-only mode). On clusters with delta-spark installed this is a real
 ``DeltaTable.merge`` (low-shuffle, file-pruned by the merge predicate). In
 environments without Delta (this container) the same semantics run as a
-full-outer-join rewrite + atomic overwrite — correct, but O(target) IO; the
-Delta path is the 100 TB path.
+rewrite: one full outer join of target and source, then one filter and one
+projection that apply every clause per joined row, then an atomic
+overwrite. That is one join per batch, but the I/O is still O(target) —
+the whole table is read and rewritten — so the Delta path is the 100 TB
+path.
 
 Predicates reference the aliases ``current`` (target) and ``new`` (source),
 exactly as in the reference.
@@ -21,6 +24,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_engine_spark.core.definitions import MergeOptions
 from lakehouse_engine_spark.core.exec_env import ExecEnv
+from lakehouse_engine_spark.utils.sql_parser import quote_ident
 
 
 def merge(
@@ -232,12 +236,12 @@ def _store_assign(df, schema, keep_extra: bool = False):
     for f_ in schema.fields:
         src = by_lower.get(f_.name.lower())
         if src is not None:
-            out.append(F.col(src).cast(f_.dataType).alias(f_.name))
+            out.append(F.col(quote_ident(src)).cast(f_.dataType).alias(f_.name))
         else:
             out.append(F.lit(None).cast(f_.dataType).alias(f_.name))
     if keep_extra:
         named = {f_.name.lower() for f_ in schema.fields}
-        out.extend(F.col(c) for c in df.columns if c.lower() not in named)
+        out.extend(F.col(quote_ident(c)) for c in df.columns if c.lower() not in named)
     return df.select(*out)
 
 
@@ -246,10 +250,14 @@ def _merge_rewrite(spark, df, opts: MergeOptions, location, db_table, data_forma
 
     Packs each side into a struct column named after its merge alias so the
     user's ``current.x = new.y`` predicates evaluate unchanged as struct-field
-    accesses. Store assignment follows Delta: the target's declared schema
-    (the table itself, or the catalog table registered at a path target)
-    casts the incoming frame before merging, so e.g. a CSV batch whose
-    inferSchema disagrees with the DDL lands with the declared types.
+    accesses. The result is one pass over one full outer join (see
+    :func:`_merged_frame`): each joined row is kept or dropped by one filter
+    and takes its insert, update or current values in one projection. The
+    whole target is still read and rewritten per call. Store assignment
+    follows Delta: the target's declared schema (the table itself, or the
+    catalog table registered at a path target) casts the incoming frame
+    before merging, so e.g. a CSV batch whose inferSchema disagrees with the
+    DDL lands with the declared types.
 
     Concurrency: the whole read→join→overwrite is guarded by the
     best-effort :class:`~lakehouse_engine_spark.io.table_lock.WriterLock`
@@ -303,9 +311,40 @@ def _merge_rewrite_locked(spark, df, opts: MergeOptions, location, db_table, fmt
             _first_load()
             return
         raise
+    result = _merged_frame(target, df, opts)
+    # Materialize before overwriting the table we read from.
+    result = result.localCheckpoint(eager=True)
+    if lock is not None:
+        # last gate before the destructive overwrite: if another writer
+        # stole the lock (treated ours as stale), our materialized result
+        # no longer includes their update — refuse loudly
+        lock.verify()
+    if db_table:
+        _save_table(result, spark, db_table, fmt)
+    else:
+        result.write.format(fmt).mode("overwrite").save(location)
+
+
+def _merged_frame(target: DataFrame, df: DataFrame, opts: MergeOptions) -> DataFrame:
+    """The merge result of ``df`` (alias ``new``) into ``target`` (alias
+    ``current``): one full outer join, one filter, one projection.
+
+    Per joined row, with Delta's clause order (delete, then update, else
+    keep; unmatched source rows go through the insert clause):
+
+    - a target-only row is kept as is;
+    - a matched row is dropped if the delete clause fires, takes the update
+      values if the update clause fires, and is kept as is otherwise;
+    - a source-only row is inserted if the insert clause fires.
+
+    A clause condition that evaluates to NULL does not fire (Delta rule):
+    a NULL delete keeps the row, a NULL update leaves it untouched, and a
+    NULL insert drops it. Under ``insert_only`` matched rows are never
+    deleted or updated.
+    """
     src_cols = {c.lower() for c in df.columns}
     auto_merge_flag = (
-        spark.conf.get(
+        df.sparkSession.conf.get(
             "spark.databricks.delta.schema.autoMerge.enabled", "false"
         )
         or "false"
@@ -337,74 +376,48 @@ def _merge_rewrite_locked(spark, df, opts: MergeOptions, location, db_table, fmt
             if c.lower() not in tgt_lower:
                 target = target.withColumn(c, F.lit(None).cast(src_types[c]))
     cols = target.columns
-    cur = target.select(F.struct(*target.columns).alias("current"))
-    new = df.select(F.struct(*df.columns).alias("new"))
+    tgt_types = dict(target.dtypes)
+    cur = target.select(F.struct(*[F.col(quote_ident(c)) for c in cols]).alias("current"))
+    new = df.select(F.struct(*[F.col(quote_ident(c)) for c in df.columns]).alias("new"))
     joined = cur.join(new, on=F.expr(opts.merge_predicate), how="full_outer")
 
-    target_only = joined.filter(F.col("new").isNull()).select("current.*")
-    matched = joined.filter(F.col("current").isNotNull() & F.col("new").isNotNull())
-    source_only = joined.filter(F.col("current").isNull())
+    current, incoming = F.col("current"), F.col("new")
+    source_only = current.isNull()
+    matched = current.isNotNull() & incoming.isNotNull()
 
-    if opts.insert_only:
-        kept_matched = matched.select("current.*")
-    else:
-        # Delta clause semantics: a NULL condition means the clause does
-        # NOT fire — a row with a null delete condition survives, and a
-        # row with a null update condition stays untouched (never lost)
-        if opts.delete_predicate:
-            matched = matched.filter(
-                ~F.coalesce(F.expr(opts.delete_predicate), F.lit(False))
-            )
-        upd_cond = F.expr(opts.update_predicate) if opts.update_predicate else F.lit(True)
-        to_update = matched.filter(upd_cond)
-        untouched = (
-            matched.filter(~F.coalesce(upd_cond, F.lit(False)))
-            if opts.update_predicate
-            else matched.limit(0)
-        )
+    def fires(predicate: Optional[str], absent: bool):
+        if not predicate:
+            return F.lit(absent)
+        return F.coalesce(F.expr(predicate), F.lit(False))
+
+    deleted = F.lit(False) if opts.insert_only else fires(opts.delete_predicate, False)
+    updated = F.lit(False) if opts.insert_only else fires(opts.update_predicate, True)
+    inserted = fires(opts.insert_predicate, True)
+    keep = incoming.isNull() | (matched & ~deleted) | (source_only & inserted)
+
+    def update_value(c: str):
         if opts.update_column_set:
-            upd_cols = [
-                F.expr(opts.update_column_set[c]).alias(c)
-                if c in opts.update_column_set
-                else F.col(f"current.{c}").alias(c)
-                for c in cols
-            ]
-        else:
-            # Delta updateAll = "SET *" over the SOURCE's columns: a
-            # target column absent from the original source keeps its
-            # CURRENT value on update (inserts leave it null)
-            upd_cols = [
-                (
-                    F.col(f"new.{c}")
-                    if c.lower() in src_cols
-                    else F.col(f"current.{c}")
-                ).alias(c)
-                for c in cols
-            ]
-        kept_matched = to_update.select(*upd_cols).unionByName(untouched.select("current.*"))
+            if c in opts.update_column_set:
+                return F.expr(opts.update_column_set[c])
+            return current.getField(c)
+        # Delta updateAll = "SET *" over the SOURCE's columns: a target
+        # column absent from the original source keeps its CURRENT value
+        # on update (inserts leave it null)
+        return incoming.getField(c) if c.lower() in src_cols else current.getField(c)
 
-    if opts.insert_predicate:
-        source_only = source_only.filter(F.expr(opts.insert_predicate))
-    if opts.insert_column_set:
-        ins_cols = [
-            F.expr(opts.insert_column_set[c]).alias(c)
-            if c in opts.insert_column_set
-            else F.lit(None).cast(dict(target.dtypes)[c]).alias(c)
+    def insert_value(c: str):
+        if not opts.insert_column_set:
+            return incoming.getField(c)
+        if c in opts.insert_column_set:
+            return F.expr(opts.insert_column_set[c])
+        return F.lit(None).cast(tgt_types[c])
+
+    return joined.filter(keep).select(
+        *[
+            F.when(source_only, insert_value(c))
+            .when(matched & updated, update_value(c))
+            .otherwise(current.getField(c))
+            .alias(c)
             for c in cols
         ]
-    else:
-        ins_cols = [F.col(f"new.{c}").alias(c) for c in cols]
-    inserts = source_only.select(*ins_cols)
-
-    result = target_only.unionByName(kept_matched).unionByName(inserts)
-    # Materialize before overwriting the table we read from.
-    result = result.localCheckpoint(eager=True)
-    if lock is not None:
-        # last gate before the destructive overwrite: if another writer
-        # stole the lock (treated ours as stale), our materialized result
-        # no longer includes their update — refuse loudly
-        lock.verify()
-    if db_table:
-        _save_table(result, spark, db_table, fmt)
-    else:
-        result.write.format(fmt).mode("overwrite").save(location)
+    )

@@ -1,14 +1,27 @@
-"""SQL file splitting — statement splitter respecting quotes/comments.
+"""SQL string helpers: statement splitting and identifier quoting.
 
 Reference semantics: ``utils/sql_parser_utils.py:9-173`` (hand-written state
 machine). Splits a DDL file into executable statements on ``;`` while
 ignoring semicolons inside single/double quotes, backticks, line comments
 (``--``) and block comments (``/* */``).
+
+:func:`quote_ident` is the one quoting rule for every place that builds SQL
+text or a ``F.col`` reference from a column name.
 """
 
 from __future__ import annotations
 
 from typing import List
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier.
+
+    A dot or a backtick in a bare name changes its meaning (``a.b`` is field
+    ``b`` of ``a``) or breaks the parse; quoted, it is always the one column
+    called ``name``. Embedded backticks are doubled.
+    """
+    return "`" + name.replace("`", "``") + "`"
 
 
 def split_sql_statements(sql: str) -> List[str]:

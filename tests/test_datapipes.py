@@ -4324,6 +4324,31 @@ def test_dsir_score_matches_python_reference(spark):
         t("text_dsir_score", target_df=tgt, target_text_col="nope")
 
 
+def test_dsir_score_quotes_odd_text_column_names(spark):
+    """The SQL-string gram builder quotes the text column: an input name
+    with a backtick and a target name with a dot and a backtick score
+    exactly as the plain ``text`` columns do."""
+    src_rows = [
+        (1, "the model trains on the web data"),
+        (2, "the model reads the target style text"),
+        (3, "zz qq xx vv kk jj pp ww"),
+    ]
+    tgt_rows = [("the target style text is clean",), ("the model reads text",)]
+
+    def scores(src_col, tgt_col):
+        df = spark.createDataFrame(src_rows, ["doc_id", src_col])
+        tgt = spark.createDataFrame(tgt_rows, [tgt_col])
+        out = df.transform(t(
+            "text_dsir_score", target_df=tgt, input_col=src_col,
+            target_text_col=tgt_col, num_buckets=64,
+        ))
+        return {r["doc_id"]: r["dsir_score"] for r in out.collect()}
+
+    plain = scores("text", "text")
+    assert scores("te`xt", "tgt.te`xt") == plain
+    assert len(plain) == 3 and None not in plain.values()
+
+
 def test_mixing_samplers_group_cardinality_guard(spark, monkeypatch):
     """The per-group threshold collect is a driver control decision sized
     for language/domain cardinality; past MAX_MIX_GROUPS distinct groups

@@ -6,6 +6,7 @@ same MergeOptions drive DeltaTable.merge when delta-spark is present)."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -168,7 +169,13 @@ def test_merge_all_clauses_together(spark, target):
     """The full clause set in ONE merge — delete predicate, conditional
     update with a column set, conditional insert: each matched row takes
     exactly one clause in Delta's order (delete, then update, else keep),
-    and unmatched rows go through the insert filter."""
+    and unmatched rows go through the insert filter. A clause whose
+    condition is NULL does not fire: the NULL-delete row survives (and
+    falls through to the update), the NULL-update row stays untouched and
+    the NULL-insert row is dropped."""
+    spark.createDataFrame(
+        [(4, None, 400), (5, "null-update", 500)], "id INT, tag STRING, val INT"
+    ).write.mode("append").parquet(target)
     out = _merge(
         spark,
         target,
@@ -176,8 +183,11 @@ def test_merge_all_clauses_together(spark, target):
             (1, "src1", 50),     # matched: no delete, update cond val>60 fails -> untouched
             (2, "src2", 999),    # matched: update fires (val -> 999)
             (3, "src3", 0),      # matched: delete fires (tag = delete-me)
+            (4, "src4", 70),     # matched: delete cond NULL -> kept, update fires
+            (5, "src5", None),   # matched: update cond NULL -> untouched
             (11, "lo", 10),      # unmatched: insert cond fails -> dropped
             (12, "hi", 5000),    # unmatched: inserted
+            (13, "null", None),  # unmatched: insert cond NULL -> dropped
         ],
         {
             "merge_predicate": "current.id = new.id",
@@ -189,8 +199,85 @@ def test_merge_all_clauses_together(spark, target):
     )
     assert_df_equal(
         out,
-        [(1, "keep", 100), (2, "update-me", 999), (12, "hi", 5000)],
+        [
+            (1, "keep", 100),
+            (2, "update-me", 999),
+            (4, None, 70),
+            (5, "null-update", 500),
+            (12, "hi", 5000),
+        ],
     )
+
+
+def _plan_nodes(df):
+    """Node names of ``df``'s optimized logical plan, one per plan line."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [m.group(1) for m in re.finditer(r"(?m)^[\s:+\-]*(\w+)", plan)]
+
+
+@pytest.mark.parametrize(
+    "opts",
+    [
+        {"merge_predicate": "current.id = new.id"},
+        {"merge_predicate": "current.id = new.id", "insert_only": True},
+        {
+            "merge_predicate": "current.id = new.id",
+            "delete_predicate": "current.tag = 'delete-me'",
+            "update_predicate": "new.val > 60",
+            "update_column_set": {"val": "new.val"},
+            "insert_predicate": "new.val >= 1000",
+            "insert_column_set": {"id": "new.id", "val": "new.val"},
+        },
+    ],
+    ids=["upsert", "insert_only", "all_clauses"],
+)
+def test_merge_rewrite_is_one_join_and_no_union(spark, target, opts):
+    """The frame the rewrite checkpoints is ONE pass over ONE full outer
+    join: every clause is applied per joined row by one filter and one
+    projection, not by per-clause branches unioned back together."""
+    from lakehouse_engine_spark.core.definitions import MergeOptions
+    from lakehouse_engine_spark.io.merge_writer import _merged_frame
+
+    new = spark.createDataFrame([(2, "x", 999), (12, "y", 5000)], "id INT, tag STRING, val INT")
+    frame = _merged_frame(spark.read.parquet(target), new, MergeOptions(**opts))
+    nodes = _plan_nodes(frame)
+    assert nodes.count("Join") == 1, nodes
+    assert "Union" not in nodes, nodes
+
+
+def test_merge_column_names_with_dot_and_backtick(spark, tmp_dir):
+    """Column names are identifiers, never parsed: a dotted name is not a
+    struct-field access and a backtick does not break the reference."""
+    path = os.path.join(tmp_dir, "odd")
+    schema = "id INT, `v.x` STRING, `b``q` INT"
+    spark.createDataFrame([(1, "a", 10), (2, "b", 20)], schema).write.parquet(path)
+    load_data(
+        {
+            "input_specs": [
+                {
+                    "spec_id": "new",
+                    "data_format": "dataframe",
+                    "df_name": spark.createDataFrame([(2, "B", 21), (3, "c", 30)], schema),
+                }
+            ],
+            "output_specs": [
+                {
+                    "spec_id": "o",
+                    "input_id": "new",
+                    "data_format": "parquet",
+                    "location": path,
+                    "write_type": "merge",
+                    "merge_opts": {
+                        "merge_predicate": "current.id = new.id",
+                        "update_predicate": "new.`b``q` > current.`b``q`",
+                    },
+                }
+            ],
+        }
+    )
+    out = spark.read.parquet(path)
+    assert out.columns == ["id", "v.x", "b`q"]
+    assert_df_equal(out, [(1, "a", 10), (2, "B", 21), (3, "c", 30)])
 
 
 def test_merge_creates_target_on_first_load(spark, tmp_dir):
