@@ -42,6 +42,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from lakehouse_engine_spark.datapipes.driver_tier import bounded_rows
 from lakehouse_engine_spark.datapipes.materialize import (
     iter_materialize,
     probe_materialize,
@@ -250,7 +251,6 @@ def bpe_train(
     num_merges: int = 100,
     merges_per_round: int = 1,
     lowercase: bool = False,
-    driver_train_threshold_rows: int = DRIVER_TRAIN_THRESHOLD_ROWS,
 ) -> TransformerFn:
     """Learn a BPE merge table from the corpus; returns one row per merge:
     ``(rank, left, right, merged)`` in application order, ties broken by
@@ -277,8 +277,7 @@ def bpe_train(
             .select(_to_symbols(F.col("__w")).alias("__s"), "__cnt")
         )
         return _train_merge_loop(
-            spark, words, num_merges, merges_per_round,
-            driver_train_threshold_rows,
+            spark, words, num_merges, merges_per_round, "bpe_train"
         )
 
     return _train
@@ -289,7 +288,7 @@ def _train_merge_loop(
     words: DataFrame,
     num_merges: int,
     merges_per_round: int,
-    driver_threshold_rows: int = DRIVER_TRAIN_THRESHOLD_ROWS,
+    op: str,
 ) -> DataFrame:
     """The shared BPE merge loop over a materialized ``(__s symbol
     string, __cnt)`` word-frequency table — char-level (``bpe_train``,
@@ -297,24 +296,22 @@ def _train_merge_loop(
     marker) seed it differently but train identically. Takes OWNERSHIP
     of ``words``' cache handle (releases it every round and at exit).
 
-    Tables at or under ``driver_threshold_rows`` rows (probed with ONE
-    bounded collect over the already-materialized table) train on the
-    driver via :func:`_train_merge_loop_driver` — zero per-round Spark
-    jobs, identical merge table; ``driver_threshold_rows <= 0`` pins the
-    distributed path."""
-    if driver_threshold_rows > 0:
-        head = words.limit(driver_threshold_rows + 1).collect()
-        if len(head) <= driver_threshold_rows:
-            _release(words)
-            picked = _train_merge_loop_driver(
-                [(r["__s"], r["__cnt"]) for r in head],
-                num_merges,
-                merges_per_round,
-            )
-            return spark.createDataFrame(
-                [(i, a, b, a + b) for i, (a, b) in enumerate(picked)],
-                "rank INT, left STRING, right STRING, merged STRING",
-            )
+    Tables at or under :data:`DRIVER_TRAIN_THRESHOLD_ROWS` rows (probed
+    over the already-materialized table) train on the driver via
+    :func:`_train_merge_loop_driver` — zero per-round Spark jobs,
+    identical merge table."""
+    head = bounded_rows(words, DRIVER_TRAIN_THRESHOLD_ROWS, op)
+    if head is not None:
+        _release(words)
+        picked = _train_merge_loop_driver(
+            [(r["__s"], r["__cnt"]) for r in head],
+            num_merges,
+            merges_per_round,
+        )
+        return spark.createDataFrame(
+            [(i, a, b, a + b) for i, (a, b) in enumerate(picked)],
+            "rank INT, left STRING, right STRING, merged STRING",
+        )
     merges: List[Tuple[str, str]] = []
     try:
         while len(merges) < num_merges:
@@ -422,7 +419,7 @@ def bpe_encode(
         return lambda w: apply_merges_py(w, mlist)
 
     return _dictionary_encode(
-        _make, text_col, id_col, output_col,
+        "bpe_encode", _make, text_col, id_col, output_col,
         lowercase, broadcast_dictionary, broadcast_threshold_rows,
         pretokenizer,
     )
@@ -446,6 +443,7 @@ _EMPTY_PIECES = "array<string>"
 
 
 def _dictionary_encode(
+    op: str,
     make_word_encoder,
     text_col: str,
     id_col: str,
@@ -505,9 +503,9 @@ def _dictionary_encode(
         probe_cap = _DRIVER_ENCODE_THRESHOLD_ROWS
         if broadcast_dictionary is None:
             probe_cap = min(probe_cap, broadcast_threshold_rows)
-        if broadcast_dictionary is not False and probe_cap > 0:
-            rows = distinct_words.limit(probe_cap + 1).collect()
-            if len(rows) <= probe_cap:
+        if broadcast_dictionary is not False:
+            rows = bounded_rows(distinct_words, probe_cap, op)
+            if rows is not None:
                 head = [(r["__w"], word_encoder(r["__w"])) for r in rows]
 
         if head is not None and len(head) <= _LITERAL_MAP_THRESHOLD_ROWS:
@@ -605,7 +603,6 @@ def bpe_byte_train(
     merges_per_round: int = 1,
     lowercase: bool = False,
     pretokenizer: str = "whitespace",
-    driver_train_threshold_rows: int = DRIVER_TRAIN_THRESHOLD_ROWS,
 ) -> TransformerFn:
     """Learn a BYTE-level BPE merge table (the GPT-2 training scheme):
     pretokens (whitespace or the GPT-2 regex split) map to their UTF-8
@@ -651,8 +648,7 @@ def bpe_byte_train(
         )
         words = _materialize(counts.select(_sym("__w").alias("__s"), "__cnt"))
         return _train_merge_loop(
-            spark, words, num_merges, merges_per_round,
-            driver_train_threshold_rows,
+            spark, words, num_merges, merges_per_round, "bpe_byte_train"
         )
 
     return _train
@@ -748,7 +744,7 @@ def wordpiece_encode(
     # driver-encoded broadcast rows / distributed pandas + gated join) —
     # one copy with the BPE encoders instead of a parallel body
     return _dictionary_encode(
-        _make, text_col, id_col, output_col,
+        "wordpiece_encode", _make, text_col, id_col, output_col,
         lowercase, broadcast_dictionary, broadcast_threshold_rows,
     )
 
@@ -868,9 +864,9 @@ def unigram_encode(
         probe_cap = _DRIVER_ENCODE_THRESHOLD_ROWS
         if broadcast_dictionary is None:
             probe_cap = min(probe_cap, broadcast_threshold_rows)
-        if broadcast_dictionary is not False and probe_cap > 0:
-            hrows = distinct_words.limit(probe_cap + 1).collect()
-            if len(hrows) <= probe_cap:
+        if broadcast_dictionary is not False:
+            hrows = bounded_rows(distinct_words, probe_cap, "unigram_encode")
+            if hrows is not None:
                 head = []
                 for r in hrows:
                     p, s = unigram_viterbi_py(
@@ -1127,7 +1123,7 @@ def bpe_byte_encode(
         return lambda w: apply_merges_byte_py(w, mlist)
 
     return _dictionary_encode(
-        _make, text_col, id_col, output_col,
+        "bpe_byte_encode", _make, text_col, id_col, output_col,
         lowercase, broadcast_dictionary, broadcast_threshold_rows,
         pretokenizer,
     )

@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from lakehouse_engine_spark.datapipes.driver_tier import bounded_rows
 from lakehouse_engine_spark.datapipes.registry import register
 
 TransformerFn = Callable[[DataFrame], DataFrame]
@@ -79,14 +80,9 @@ def _floordiv(s: int, n: int) -> int:
     return -((-s + n - 1) // n)
 
 
-# Driver tier (r15, the bpe_train pattern): when the whole quantized
-# corpus fits under this element budget (rows x dim int64 grid points —
-# ~120 MB of collected Python rows at the default), the Lloyd loop runs
-# on the driver with ZERO per-iteration Spark jobs instead of
-# 1-2 collect jobs per round. The distributed loop is byte-for-byte
-# unchanged above the gate (the 100 TB path), and the gate probe is a
-# BOUNDED limit(n+1) collect, not a count over the corpus. Tests pin the
-# two tiers bit-identical (test_kmeans_driver_tier_parity).
+# Driver-tier cap (see driver_tier.py) in quantized elements (rows x dim
+# int64 grid points, ~120 MB of collected Python rows at the default):
+# below it the Lloyd loop runs on the driver.
 DRIVER_KMEANS_MAX_ELEMS = 4_000_000
 
 
@@ -101,30 +97,19 @@ def _py_id_hash(x) -> str:
 
 
 def _driver_collect(df: DataFrame, id_col: str, input_col: str,
-                    quant_scale: int, dim: int):
-    """Bounded collect of the quantized (id, vector) table for the
-    driver tier. Returns the complete row list when the corpus fits
-    under :data:`DRIVER_KMEANS_MAX_ELEMS` and ids are driver-hashable
-    (int/str — matching the md5-cast replica); None otherwise (the
-    distributed loop takes over)."""
-    max_rows = max(DRIVER_KMEANS_MAX_ELEMS // max(dim, 1), 1)
-    if max_rows <= 0:
-        return None
-    rows = (
+                    quant_scale: int, dim: int, op: str):
+    """The quantized (id, vector) rows when the corpus fits under
+    :data:`DRIVER_KMEANS_MAX_ELEMS` and the ids are driver-hashable
+    (matching the md5-cast replica); None otherwise."""
+    return bounded_rows(
         df.select(
             F.col(id_col).alias("__km_id"),
             _quantize_expr(input_col, quant_scale).alias("__km_v"),
-        )
-        .limit(max_rows + 1)
-        .collect()
+        ),
+        DRIVER_KMEANS_MAX_ELEMS // dim,
+        op,
+        "__km_id",
     )
-    if len(rows) > max_rows:
-        return None
-    for r in rows:
-        i = r["__km_id"]
-        if isinstance(i, bool) or not isinstance(i, (int, str)):
-            return None  # exotic id type: keep the engine-side md5 path
-    return rows
 
 
 def _driver_usable(rows):
@@ -395,8 +380,9 @@ def embedding_kmeans(
                 F.lit(0).cast("int").alias(output_col),
                 zdist.alias(f"{output_col}_dist"),
             )
-        # ----- driver tier (r15): whole-corpus local Lloyd when small -----
-        rows = _driver_collect(df, id_col, input_col, quant_scale, dim)
+        rows = _driver_collect(
+            df, id_col, input_col, quant_scale, dim, "embedding_kmeans"
+        )
         if rows is not None:
             ids, vecs = _driver_usable(rows)
             if not ids:
@@ -646,8 +632,9 @@ def embedding_kmeans_hier(
                 F.lit(0).cast("int").alias(output_col),
                 zdist.alias(f"{output_col}_dist"),
             )
-        # ----- driver tier (r15): both levels local when the corpus fits --
-        rows = _driver_collect(df, id_col, input_col, quant_scale, dim)
+        rows = _driver_collect(
+            df, id_col, input_col, quant_scale, dim, "embedding_kmeans_hier"
+        )
         if rows is not None:
             ids, vecs = _driver_usable(rows)
             if not ids:
@@ -674,27 +661,9 @@ def embedding_kmeans_hier(
                 if len(lst) < k_fine:
                     lst.append(list(vecs[i]))
             cmap = {c: np.array(v, dtype=np.int64) for c, v in cells.items()}
-            # confined fine Lloyd rounds (same update rule per cell)
-            for _ in range(fine_iterations):
-                nxt = {c: m.copy() for c, m in cmap.items()}
-                for c, m in cmap.items():
-                    Xi = X[gv == c]
-                    if not len(Xi):
-                        continue
-                    mn = (m * m).sum(axis=1)
-                    d = (
-                        (Xi * Xi).sum(axis=1)[:, None]
-                        - 2 * (Xi @ m.T)
-                        + mn[None, :]
-                    )
-                    a = d.argmin(axis=1)
-                    for j in range(len(m)):
-                        mm = a == j
-                        n = int(mm.sum())
-                        if n:
-                            s = Xi[mm].sum(axis=0)
-                            nxt[c][j] = [_floordiv(int(sv), n) for sv in s]
-                cmap = nxt
+            # confined fine Lloyd rounds: the cells are independent
+            for c in cmap:
+                cmap[c] = _driver_lloyd(X[gv == c], cmap[c], fine_iterations)
             out = df.select(
                 "*", _quantize_expr(input_col, quant_scale).alias("__km_v")
             )
@@ -1070,16 +1039,15 @@ def knn_pq(
         # simply not selected (filter semantics)
         qsrc = df.filter(query_filter) if query_filter else df
         max_q = 100_000
-        qrows = (
+        qrows = bounded_rows(
             qsrc.select(
                 F.col(id_col).alias("__pq_id"),
                 _quantize_expr(embedding_col, quant_scale).alias("__pq_v"),
-            )
-            .filter(_usable_sample("__pq_v"))
-            .limit(max_q + 1)
-            .collect()
+            ).filter(_usable_sample("__pq_v")),
+            max_q,
+            "knn_pq",
         )
-        if len(qrows) > max_q:
+        if qrows is None:
             raise ValueError(
                 f"knn_pq: query_filter selected more than {max_q} rows — "
                 "queries and their LUTs ride the kernel closure; a "

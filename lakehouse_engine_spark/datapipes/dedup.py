@@ -36,6 +36,10 @@ from lakehouse_engine_spark.datapipes.colbuild import (
     dot_elements,
     element_aliases,
 )
+from lakehouse_engine_spark.datapipes.driver_tier import (
+    bounded_rows,
+    min_label_union_find,
+)
 from lakehouse_engine_spark.datapipes.materialize import (
     iter_materialize,
     release,
@@ -67,12 +71,8 @@ def _gen_ab(n: int) -> List[tuple]:
 
 MINHASH_AB = _gen_ab(32)
 
-# Driver tier gate for dedup_connected_components (r15, the kmeans/bpe
-# pattern): when the (doc, bucket) edge table fits under this row
-# budget — probed with a bounded limit(n+1) collect, never a corpus
-# count — the min-label fixpoint runs as a driver union-find with zero
-# per-round Spark jobs. The distributed propagation loop is unchanged
-# above the gate (the 100 TB path). Tests pin both tiers row-identical.
+# Driver-tier cap (see driver_tier.py) on the (doc, bucket) edge rows of
+# dedup_connected_components.
 DEDUP_CC_DRIVER_MAX_EDGES = 500_000
 
 
@@ -1013,9 +1013,11 @@ def dedup_connected_components(
     bucket, then min bucket-label per doc) shuffling only (id/bucket, long);
     rounds needed = the bucket-graph diameter of the largest cluster (tiny
     for near-dup clusters — they are bucket-cliques; converges in 1-3 rounds
-    in practice, bounded by ``max_iterations``). Convergence is detected by
-    an exact changed-label count over the materialized round result (type-
-    agnostic — ids may be strings), one scalar action per round;
+    in practice). Convergence is detected by an exact changed-label count
+    over the materialized round result (type-agnostic — ids may be
+    strings), one scalar action per round; a loop still changing after
+    ``max_iterations`` rounds raises ``RuntimeError`` (the driver tier of
+    small inputs returns the closure — see driver_tier.py);
     ``localCheckpoint`` truncates the growing lineage so round N's plan does
     not replay rounds 1..N-1.
 
@@ -1031,55 +1033,35 @@ def dedup_connected_components(
         raise ValueError(f"keep must be clusters|survivors|best, got {keep!r}")
     if keep == "best" and not best_by:
         raise ValueError('keep="best" requires best_by (a SQL expression)')
+    if max_iterations < 1:
+        raise ValueError(
+            f"dedup_connected_components: max_iterations must be >= 1, "
+            f"got {max_iterations}"
+        )
     _validate_banding("dedup_connected_components", num_hashes, bands)
     rows = num_hashes // bands
 
     def _cc(df: DataFrame) -> DataFrame:
         sig = _minhash_sig_df(df, text_col, id_col, num_hashes, shingle_size)
         edges = _band_exploded(sig, bands, rows).persist(StorageLevel.MEMORY_AND_DISK)
-        # ----- driver tier (r15, the kmeans/bpe gate pattern): when the
-        # (doc, bucket) edge table fits under a bounded limit(n+1)
-        # collect, the min-label fixpoint is a driver union-find over
-        # the bipartite graph — the component minimum over DOC ids is
-        # exactly what the iterative propagation converges to — with
-        # zero per-round Spark jobs. The distributed loop below is
-        # unchanged above the gate or for exotic/NULL ids (Python
-        # ordering must replicate Spark's; a NULL id never equi-joins).
-        probe_rows = edges.limit(DEDUP_CC_DRIVER_MAX_EDGES + 1).collect()
-        driver_ok = len(probe_rows) <= DEDUP_CC_DRIVER_MAX_EDGES and all(
-            r["__id"] is not None
-            and r["__h"] is not None
-            and not isinstance(r["__id"], bool)
-            and isinstance(r["__id"], (int, str))
-            for r in probe_rows
+        # below the cap, a driver union-find gives the component minimum
+        # over doc ids that the propagation loop converges to; each
+        # bucket's docs chain to its first doc
+        probe_rows = bounded_rows(
+            edges, DEDUP_CC_DRIVER_MAX_EDGES, "dedup_connected_components",
+            "__id",
         )
-        if driver_ok:
-            parent: dict = {}
-
-            def find(x):
-                root = x
-                while parent.get(root, root) != root:
-                    root = parent[root]
-                while parent.get(x, x) != x:
-                    parent[x], x = root, parent[x]
-                return root
-
-            for r in probe_rows:
-                a, b = find(("d", r["__id"])), find(("b", r["__h"]))
-                if a != b:
-                    parent[b] = a
-            comp_min: dict = {}
-            doc_ids = {r["__id"] for r in probe_rows}
-            for i in doc_ids:
-                root = find(("d", i))
-                cur = comp_min.get(root)
-                if cur is None or i < cur:
-                    comp_min[root] = i
+        if probe_rows is not None:
             from pyspark.sql import types as T
 
+            first: dict = {}
+            pairs = [
+                (first.setdefault(r["__h"], r["__id"]), r["__id"])
+                for r in probe_rows
+            ]
             idt = df.schema[id_col].dataType
             labels = df.sparkSession.createDataFrame(
-                [(i, comp_min[find(("d", i))]) for i in doc_ids],
+                list(min_label_union_find(pairs).items()),
                 T.StructType(
                     [
                         T.StructField("__id", idt),
@@ -1097,8 +1079,9 @@ def dedup_connected_components(
             corpus_sized=True,
         )
         first_round = True
+        converged = False
         for _ in range(max_iterations):
-            # Round 1 specialization (r15): the initial label table is
+            # Round 1 specialization: the initial label table is
             # the IDENTITY map (label == id by construction), so the
             # first round's bucket minimum is min(id) per bucket
             # straight off the cached edge table — the edges⋈labels
@@ -1158,8 +1141,15 @@ def dedup_connected_components(
                 stepped, "_lhe_cache_handle", None
             )
             if changed == 0:
+                converged = True
                 break
         edges.unpersist()
+        if not converged:
+            raise RuntimeError(
+                f"dedup_connected_components: labels still changing after "
+                f"{max_iterations} rounds; raise max_iterations (rounds "
+                f"needed = the bucket-graph diameter of the largest cluster)"
+            )
         return _cc_emit(df, labels)
 
     def _cc_emit(df: DataFrame, labels: DataFrame) -> DataFrame:

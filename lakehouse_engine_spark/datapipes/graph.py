@@ -25,6 +25,10 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_engine_spark.datapipes.driver_tier import (
+    bounded_rows,
+    min_label_union_find,
+)
 from lakehouse_engine_spark.datapipes.materialize import (
     iter_materialize,
     release,
@@ -35,28 +39,9 @@ TransformerFn = Callable[[DataFrame], DataFrame]
 
 SCALE = 10**12
 
-# Driver tier gate (r15, the kmeans/bpe pattern): when the DISTINCT
-# canonical edge set fits under this row budget (probed with a bounded
-# limit(n+1) collect, never a corpus count), the iterative loop runs on
-# the driver — union-find for connected components, the exact int64
-# recurrence for PageRank — with ZERO per-round Spark jobs. The
-# distributed loops are byte-for-byte unchanged above the gate (the
-# 100 TB path); ids outside int/str fall back too (Python ordering must
-# replicate Spark's). Tests pin both tiers row-identical.
+# Driver-tier cap (see driver_tier.py) on the distinct canonical edges
+# (connected components) or the edge rows (PageRank).
 GRAPH_DRIVER_MAX_EDGES = 200_000
-
-
-def _driver_safe_ids(rows, *cols) -> bool:
-    """True when every id in the collected rows is an int or str —
-    the types whose Python ordering/equality replicate Spark's."""
-    for r in rows:
-        for c in cols:
-            v = r[c]
-            if v is None:
-                continue
-            if isinstance(v, bool) or not isinstance(v, (int, str)):
-                return False
-    return True
 
 
 @register("graph_connected_components")
@@ -137,45 +122,22 @@ def connected_components(
             )
             .distinct()
         )
-        # ----- driver tier (r15): union-find when the edge set is small.
-        # The star rounds exist for graphs whose EDGE SET cannot sit on
-        # one machine; below the gate a driver union-find computes the
-        # identical min-of-component labels (pinned against the star
-        # rounds by test_connected_components_driver_tier_parity and by
-        # the union-find reference test) with zero per-round jobs. The
-        # bounded limit(n+1) collect doubles as the materialization the
-        # stats probe would have paid.
-        probe_rows = canonical.limit(GRAPH_DRIVER_MAX_EDGES + 1).collect()
-        if len(probe_rows) <= GRAPH_DRIVER_MAX_EDGES and _driver_safe_ids(
-            probe_rows, "__u", "__v"
-        ):
-            parent: dict = {}
-
-            def find(x):
-                root = x
-                while parent.get(root, root) != root:
-                    root = parent[root]
-                while parent.get(x, x) != x:
-                    parent[x], x = root, parent[x]
-                return root
-
-            for r in probe_rows:
-                ra, rb = find(r["__u"]), find(r["__v"])
-                if ra != rb:
-                    # union by the SMALLER root so every component root
-                    # is its minimum id (the star algorithm's label)
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-            members = set(parent)
-            for r in probe_rows:
-                members.add(r["__u"])
-                members.add(r["__v"])
-            spark = df.sparkSession
+        # below the cap, a driver union-find gives the star rounds'
+        # min-of-component labels with no per-round jobs
+        probe_rows = bounded_rows(
+            canonical, GRAPH_DRIVER_MAX_EDGES, "graph_connected_components",
+            "__u", "__v",
+        )
+        if probe_rows is not None:
             from pyspark.sql import types as T
 
-            ndt = df.schema[src_col].dataType
-            labels = spark.createDataFrame(
-                [(m, find(m)) for m in members],
+            ndt = canonical.schema["__u"].dataType
+            labels = df.sparkSession.createDataFrame(
+                list(
+                    min_label_union_find(
+                        (r["__u"], r["__v"]) for r in probe_rows
+                    ).items()
+                ),
                 T.StructType(
                     [
                         T.StructField("__node", ndt),
@@ -303,28 +265,32 @@ def pagerank(
 
     def _pr(df: DataFrame) -> DataFrame:
         from pyspark import StorageLevel
+        from pyspark.sql import types as T
 
         edges = df.select(
             F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst")
         )
-        # ----- driver tier (r15): the exact int64 recurrence locally
-        # when the edge list is small (bounded limit(n+1) collect; the
-        # kmeans/bpe gate pattern). Every quantity is the same integer
-        # arithmetic the distributed loop computes — order-free sums,
-        # floor division, dangling leak — so ranks are bit-identical
-        # (pinned by test_pagerank_driver_tier_parity and the existing
-        # pure-Python reference test). Zero per-iteration Spark jobs;
-        # the distributed loop is unchanged above the gate. SQL
-        # equi-join semantics are replicated exactly: a NULL-src edge
-        # never matches the rank table (contributes nothing), while
-        # NULL destinations aggregate as a regular group.
-        probe_rows = edges.limit(GRAPH_DRIVER_MAX_EDGES + 1).collect()
-        if len(probe_rows) <= GRAPH_DRIVER_MAX_EDGES and _driver_safe_ids(
-            probe_rows, "__src", "__dst"
-        ):
-            from pyspark.sql import types as T
-
-            ndt = df.schema[src_col].dataType
+        nodes = (
+            edges.select(F.col("__src").alias("__node"))
+            .union(edges.select(F.col("__dst").alias("__node")))
+            .distinct()
+        )
+        # both tiers type `node` as the src ∪ dst union does (an INT src
+        # with a BIGINT dst yields BIGINT)
+        out_schema = T.StructType(
+            [
+                T.StructField("node", nodes.schema["__node"].dataType),
+                T.StructField(f"{output_col}_s", T.LongType()),
+                T.StructField(output_col, T.DoubleType()),
+            ]
+        )
+        # below the cap, the same int64 recurrence runs on the driver:
+        # order-free sums, floor division and the dangling leak, so ranks
+        # are bit-identical
+        probe_rows = bounded_rows(
+            edges, GRAPH_DRIVER_MAX_EDGES, "graph_pagerank", "__src", "__dst"
+        )
+        if probe_rows is not None:
             node_set = set()
             outdeg_d: dict = {}
             for r in probe_rows:
@@ -333,44 +299,22 @@ def pagerank(
                 outdeg_d[r["__src"]] = outdeg_d.get(r["__src"], 0) + 1
             n = len(node_set)
             if n == 0:
-                return df.sparkSession.createDataFrame(
-                    [],
-                    T.StructType(
-                        [
-                            T.StructField("node", ndt),
-                            T.StructField(f"{output_col}_s", T.LongType()),
-                            T.StructField(output_col, T.DoubleType()),
-                        ]
-                    ),
-                )
+                return df.sparkSession.createDataFrame([], out_schema)
             init_s = SCALE // n
             base_s = (3 * SCALE) // (20 * n)
             ranks_d = {m: init_s for m in node_set}
             for _ in range(iterations):
                 contrib: dict = {}
                 for r in probe_rows:
-                    s = r["__src"]
-                    if s is None:
-                        continue  # NULL src: the rank equi-join drops it
+                    s, d = r["__src"], r["__dst"]
                     c = (ranks_d[s] * 17) // (20 * outdeg_d[s])
-                    d = r["__dst"]
                     contrib[d] = contrib.get(d, 0) + c
                 ranks_d = {
                     m: base_s + contrib.get(m, 0) for m in node_set
                 }
-            out = df.sparkSession.createDataFrame(
-                [(m, ranks_d[m]) for m in node_set],
-                T.StructType(
-                    [
-                        T.StructField("__node", ndt),
-                        T.StructField("__r", T.LongType()),
-                    ]
-                ),
-            )
-            return out.select(
-                F.col("__node").alias("node"),
-                F.col("__r").alias(f"{output_col}_s"),
-                (F.col("__r") / F.lit(float(SCALE))).alias(output_col),
+            return df.sparkSession.createDataFrame(
+                [(m, r, r / float(SCALE)) for m, r in ranks_d.items()],
+                out_schema,
             )
         outdeg = edges.groupBy("__src").agg(
             F.count(F.lit(1)).cast("long").alias("__outdeg")
@@ -378,30 +322,10 @@ def pagerank(
         # annotate each edge with its source's out-degree ONCE — the
         # per-iteration join then only touches the rank table
         annotated = edges.join(outdeg, "__src").persist(StorageLevel.MEMORY_AND_DISK)
-        nodes = (
-            edges.select(F.col("__src").alias("__node"))
-            .union(edges.select(F.col("__dst").alias("__node")))
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
         n = nodes.count()
         if n == 0:
-            # empty-graph schema must MATCH the populated path's: node
-            # keeps the caller's src column type (a long-typed empty
-            # frame breaks unions with string-keyed outputs — r14 review)
-            from pyspark.sql import types as T
-
-            ndt = df.schema[src_col].dataType
-            return df.sparkSession.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        T.StructField("node", ndt),
-                        T.StructField(f"{output_col}_s", T.LongType()),
-                        T.StructField(output_col, T.DoubleType()),
-                    ]
-                ),
-            )
+            return df.sparkSession.createDataFrame([], out_schema)
         init_s = SCALE // n
         base_s = (3 * SCALE) // (20 * n)
         ranks = iter_materialize(

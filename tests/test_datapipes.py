@@ -2041,40 +2041,6 @@ def test_bpe_train_matches_reference_trainer(spark):
         t("bpe_train", merges_per_round=0)
 
 
-def test_bpe_driver_path_equals_distributed_path(spark):
-    """The r14 driver-side fast path (word table collected under the
-    threshold, merge loop run in Python) must produce the bit-identical
-    merge table the distributed per-round loop produces — including on a
-    tie-rich corpus (equal pair counts decided by the pair-string
-    tie-break) and under batched merges_per_round>1 picking."""
-    text = ("ab ab ba ba cd cd dc dc abab baba low lower lowest "
-            "aa aa aa bb bb bb ab ba")
-    df = spark.createDataFrame([(1, text)], "doc_id LONG, text STRING")
-    for mpr in (1, 3):
-        fast = df.transform(
-            t("bpe_train", num_merges=10, merges_per_round=mpr)
-        )
-        slow = df.transform(
-            t("bpe_train", num_merges=10, merges_per_round=mpr,
-              driver_train_threshold_rows=0)  # pins the distributed path
-        )
-        got_fast = [tuple(r) for r in fast.orderBy("rank").collect()]
-        got_slow = [tuple(r) for r in slow.orderBy("rank").collect()]
-        assert got_fast == got_slow, f"mpr={mpr}"
-    # byte-level trainer: same dual-path pin (gpt2 pretokens exercise the
-    # space-carrying byte symbols)
-    fast_b = df.transform(
-        t("bpe_byte_train", num_merges=6, pretokenizer="gpt2")
-    )
-    slow_b = df.transform(
-        t("bpe_byte_train", num_merges=6, pretokenizer="gpt2",
-          driver_train_threshold_rows=0)
-    )
-    assert [tuple(r) for r in fast_b.orderBy("rank").collect()] == [
-        tuple(r) for r in slow_b.orderBy("rank").collect()
-    ]
-
-
 def test_bpe_batched_rounds_yield_valid_encoder(spark):
     """merges_per_round>1 batches non-interacting pairs: the merge table
     may reorder vs canonical, but encoding still reconstructs every word
@@ -2781,79 +2747,201 @@ def test_connected_components_round_set_identity():
             E = got_old
 
 
-def test_graph_driver_tier_parity(spark, monkeypatch):
-    """The r15 driver tier (union-find CC / exact int64 PageRank under
-    the bounded edge-count gate) must be row-identical to the
-    distributed loops — hub, path and seeded random graphs, self-loops
-    included."""
+def _tier_graph():
+    """A hub with a tail and self-loops, a seeded random graph, and an INT
+    src beside a BIGINT dst beyond the INT range, as disjoint parts."""
     import random
 
-    from lakehouse_engine_spark.datapipes import graph as G
-
     rng = random.Random(5)
-    graphs = [
+    hub = (
         [(0, i) for i in range(1, 40)]
         + [(i, i + 1) for i in range(30, 50)]
-        + [(50, 50), (7, 7)],
-        [(i, i + 1) for i in range(99)],
-        [(rng.randrange(60), rng.randrange(60)) for _ in range(150)],
-    ]
-    for g in graphs:
-        df = spark.createDataFrame(g, "src LONG, dst LONG")
-        monkeypatch.setattr(G, "GRAPH_DRIVER_MAX_EDGES", 200_000)
-        cc_d = sorted(
-            tuple(r)
-            for r in df.transform(t("graph_connected_components")).collect()
-        )
-        pr_d = sorted(
-            tuple(r)
-            for r in df.transform(t("graph_pagerank", iterations=4)).collect()
-        )
-        monkeypatch.setattr(G, "GRAPH_DRIVER_MAX_EDGES", 0)
-        cc_s = sorted(
-            tuple(r)
-            for r in df.transform(t("graph_connected_components")).collect()
-        )
-        pr_s = sorted(
-            tuple(r)
-            for r in df.transform(t("graph_pagerank", iterations=4)).collect()
-        )
-        assert cc_d == cc_s
-        assert pr_d == pr_s
-
-
-def test_dedup_cc_driver_tier_parity(spark, monkeypatch):
-    """The r15 union-find driver tier of dedup_connected_components
-    must match the distributed propagation loop for every keep mode,
-    long AND string ids."""
-    from lakehouse_engine_spark.datapipes import dedup as DD
-
-    docs = spark.createDataFrame(
-        [
-            (i, f"shared near duplicate body text number {i % 4} plus words")
-            for i in range(40)
-        ],
-        "doc_id LONG, text STRING",
+        + [(50, 50), (7, 7)]
     )
-    docs_s = docs.selectExpr("concat('id_', doc_id) as doc_id", "text")
-    for frame in (docs, docs_s):
-        for kw in (
-            dict(keep="clusters"),
-            dict(keep="survivors"),
-            dict(keep="best", best_by="length(text)"),
-        ):
-            fn = t(
-                "dedup_connected_components",
-                num_hashes=12,
-                bands=4,
-                shingle_size=3,
-                **kw,
-            )
-            monkeypatch.setattr(DD, "DEDUP_CC_DRIVER_MAX_EDGES", 500_000)
-            driver = sorted(tuple(r) for r in frame.transform(fn).collect())
-            monkeypatch.setattr(DD, "DEDUP_CC_DRIVER_MAX_EDGES", 0)
-            dist = sorted(tuple(r) for r in frame.transform(fn).collect())
-            assert driver == dist
+    rand = [(100 + rng.randrange(60), 100 + rng.randrange(60)) for _ in range(150)]
+    return hub + rand + [(200, 201), (201, 3_000_000_000), (202, 203)]
+
+
+def _tier_docs(kind):
+    base = [
+        (i, f"shared near duplicate body text number {i % 4} plus words")
+        for i in range(20)
+    ]
+    if kind == "null_ids":
+        return [(None if i % 5 == 0 else i, s) for i, s in base]
+    if kind == "empty":
+        return []
+    if kind == "chain":
+        # doc i shares half its words with doc i + 1 and none with i + 2
+        return [
+            (i, " ".join(f"w{j}" for j in range(8 * i, 8 * i + 16)))
+            for i in range(6)
+        ]
+    return base
+
+
+def _tier_vectors():
+    import random
+
+    rnd = random.Random(7)
+    rows = []
+    for i in range(120):
+        if i % 37 == 0:
+            v = None  # null vector
+        elif i % 53 == 0:
+            v = [rnd.uniform(-1, 1) if j != 2 else None for j in range(6)]
+        else:
+            v = [rnd.uniform(-1, 1) for j in range(6)]
+        rows.append((i, v))
+    return rows
+
+
+_BPE_TEXT = ("ab ab ba ba cd cd dc dc abab baba low lower lowest "
+             "aa aa aa bb bb bb ab ba")
+
+
+def _tier_cases():
+    """(id, module, cap constant, cap units per probed row, input frame
+    factory, op, args, args of a converging run or None, whether ids suit
+    the driver tier)."""
+    cases = []
+
+    def edges(rows):
+        return lambda s: s.createDataFrame(rows, "src INT, dst BIGINT")
+
+    # CC probes the canonical edges, which hold no NULL, so its NULL ids
+    # stay on the driver tier; they would send PageRank to the
+    # distributed tier at every cap
+    nulls = [(None, 3), (3, None)]
+    cases.append(("graph_cc-mixed", "graph", "GRAPH_DRIVER_MAX_EDGES", 1,
+                  edges(_tier_graph() + nulls), "graph_connected_components",
+                  {}, None, True))
+    # a path: one star round cannot finish it
+    cases.append(("graph_cc-chain", "graph", "GRAPH_DRIVER_MAX_EDGES", 1,
+                  edges([(i, i + 1) for i in range(6)]),
+                  "graph_connected_components", {"max_iterations": 1}, {}, True))
+    for g, rows in (("mixed", _tier_graph()), ("empty", [])):
+        cases.append((f"graph_pagerank-{g}", "graph", "GRAPH_DRIVER_MAX_EDGES", 1,
+                      edges(rows), "graph_pagerank", {"iterations": 4}, None, True))
+
+    def docs(kind, string_ids=False):
+        def build(s):
+            df = s.createDataFrame(_tier_docs(kind), "doc_id LONG, text STRING")
+            if string_ids:
+                df = df.selectExpr("concat('id_', doc_id) as doc_id", "text")
+            return df
+        return build
+
+    lsh = {"num_hashes": 12, "bands": 4, "shingle_size": 3}
+    # every keep mode emits from the same label table; "best" also orders
+    # on the id, so it is the one run with string ids
+    for ids, keep in (("long", {"keep": "clusters"}), ("long", {"keep": "survivors"}),
+                      ("string", {"keep": "best", "best_by": "length(text)"})):
+        cases.append((f"dedup_cc-{ids}-{keep['keep']}", "dedup",
+                      "DEDUP_CC_DRIVER_MAX_EDGES", 1, docs("base", ids == "string"),
+                      "dedup_connected_components", {**lsh, **keep}, None, True))
+    for kind in ("null_ids", "empty"):
+        cases.append((f"dedup_cc-{kind}", "dedup", "DEDUP_CC_DRIVER_MAX_EDGES", 1,
+                      docs(kind), "dedup_connected_components", lsh, None,
+                      kind != "null_ids"))
+    chain = {"num_hashes": 12, "bands": 12, "shingle_size": 3}
+    cases.append(("dedup_cc-chain", "dedup", "DEDUP_CC_DRIVER_MAX_EDGES", 1,
+                  docs("chain"), "dedup_connected_components",
+                  {**chain, "max_iterations": 2}, chain, True))
+
+    def vectors(string_ids):
+        def build(s):
+            df = s.createDataFrame(_tier_vectors(), "vec_id LONG, embedding ARRAY<FLOAT>")
+            if string_ids:
+                df = df.select(
+                    F.concat(F.lit("id_"), F.col("vec_id")).alias("vec_id"),
+                    "embedding",
+                )
+            return df
+        return build
+
+    # the hierarchical trainer's first level is the flat trainer, so it is
+    # the one run with string ids (md5 init order over strings)
+    cases.append(("kmeans-long", "clustering", "DRIVER_KMEANS_MAX_ELEMS", 6,
+                  vectors(False), "embedding_kmeans", {"k": 5, "iterations": 2},
+                  None, True))
+    cases.append(("kmeans_hier-string", "clustering", "DRIVER_KMEANS_MAX_ELEMS", 6,
+                  vectors(True), "embedding_kmeans_hier",
+                  {"k_coarse": 3, "k_fine": 3, "coarse_iterations": 2,
+                   "fine_iterations": 2}, None, True))
+
+    def text(rows):
+        return lambda s: s.createDataFrame(rows, "doc_id LONG, text STRING")
+
+    for mpr in (1, 3):
+        cases.append((f"bpe_train-mpr{mpr}", "bpe", "DRIVER_TRAIN_THRESHOLD_ROWS", 1,
+                      text([(1, _BPE_TEXT)]), "bpe_train",
+                      {"num_merges": 10, "merges_per_round": mpr}, None, True))
+    # gpt2 pretokens exercise the space-carrying byte symbols
+    cases.append(("bpe_byte_train-gpt2", "bpe", "DRIVER_TRAIN_THRESHOLD_ROWS", 1,
+                  text([(1, _BPE_TEXT)]), "bpe_byte_train",
+                  {"num_merges": 6, "pretokenizer": "gpt2"}, None, True))
+    return cases
+
+
+@pytest.mark.parametrize("case", _tier_cases(), ids=lambda c: c[0])
+def test_driver_tier_parity(spark, monkeypatch, caplog, case):
+    """Every gated operator gives one answer on both tiers. With n the
+    row count its bounded probe sees, the op runs at cap n + 1, n (driver)
+    and n - 1 (distributed); results and output schemas must be
+    identical, and each run's INFO line must name the tier taken. NULL
+    ids take the distributed tier at any cap. A chain longer than
+    ``max_iterations`` is the one difference the tier contract allows:
+    the driver tier returns the closure (the answer of a run with enough
+    iterations) and the distributed tier raises."""
+    import importlib
+    import logging
+
+    from lakehouse_engine_spark.datapipes import driver_tier
+
+    _id, module, cap_name, per_row, build, op, args, ref_args, ids_ok = case
+    mod = importlib.import_module(f"lakehouse_engine_spark.datapipes.{module}")
+    df = build(spark)
+    caps = []
+
+    def probe_at_n_plus_1(frame, cap, name, *id_cols):
+        caps.append(frame.count() + 1)
+        return driver_tier.bounded_rows(frame, caps[0], name, *id_cols)
+
+    def run(cap, run_args, rows=True):
+        if cap is not None:
+            monkeypatch.setattr(mod, cap_name, cap * per_row)
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=driver_tier.__name__):
+            try:
+                out = df.transform(t(op, **run_args))
+                got = (out.schema.simpleString(),
+                       sorted(map(tuple, out.collect()), key=repr) if rows else None)
+            except RuntimeError as e:
+                got = e
+        lines = [r.getMessage() for r in caplog.records]
+        return [x for x in lines if f" op={op} " in x], got
+
+    # the n + 1 run takes the same rows into the same driver loop as the
+    # n run, so only its gate decision and schema are compared
+    with monkeypatch.context() as m:
+        m.setattr(mod, "bounded_rows", probe_at_n_plus_1)
+        results = {None: run(None, args, rows=False)}
+    n = caps[0] - 1
+    for cap in (n, n - 1) if ids_ok else ():
+        results[cap] = run(cap, args)
+    for cap, (lines, _got) in results.items():
+        cap = n + 1 if cap is None else cap
+        tier = "driver" if ids_ok and 0 < cap and n <= cap else "distributed"
+        assert len(lines) == 1 and lines[0].endswith(f"cap={cap} tier={tier}"), lines
+    if not ids_ok:
+        return
+    above, at_n, below = (results[c][1] for c in (None, n, n - 1))
+    assert above[0] == at_n[0]
+    if ref_args is not None:
+        assert isinstance(below, RuntimeError), below
+        below = run(0, ref_args)[1]
+    assert at_n == below
 
 
 def test_connected_components_hub_duplicate_edges(spark):
@@ -4808,53 +4896,6 @@ def test_embedding_kmeans_edge_cases(spark):
         t("embedding_kmeans", k=0)
     with _pt.raises(ValueError):
         t("embedding_kmeans", iterations=-1)
-
-
-def test_kmeans_driver_tier_parity(spark, monkeypatch):
-    """The r15 driver tier (whole-corpus local Lloyd under the element
-    budget) must be bit-identical to the distributed loop — both
-    trainers, long AND string ids, with null vectors and null elements
-    routed per the usable-sample contract."""
-    import random as rnd
-
-    from lakehouse_engine_spark.datapipes import clustering as cl
-
-    rnd.seed(7)
-    rows = []
-    for i in range(300):
-        if i % 37 == 0:
-            v = None
-        elif i % 53 == 0:
-            v = [rnd.uniform(-1, 1) if j != 2 else None for j in range(6)]
-        else:
-            v = [rnd.uniform(-1, 1) for j in range(6)]
-        rows.append((i, v))
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-    df_s = df.select(
-        F.concat(F.lit("id_"), F.col("vec_id")).alias("vec_id"), "embedding"
-    )
-
-    def run(frame, fn):
-        return sorted(
-            tuple(r) for r in frame.transform(fn).collect()
-        )
-
-    for frame in (df, df_s):
-        for fn in (
-            t("embedding_kmeans", k=5, iterations=2),
-            t(
-                "embedding_kmeans_hier",
-                k_coarse=3,
-                k_fine=3,
-                coarse_iterations=2,
-                fine_iterations=2,
-            ),
-        ):
-            monkeypatch.setattr(cl, "DRIVER_KMEANS_MAX_ELEMS", 4_000_000)
-            driver = run(frame, fn)
-            monkeypatch.setattr(cl, "DRIVER_KMEANS_MAX_ELEMS", 0)
-            distributed = run(frame, fn)
-            assert driver == distributed
 
 
 def test_cluster_stats(spark):
